@@ -24,7 +24,7 @@ import org.apache.spark.storage.StorageLevel
   * wrapper object is negligible next to the cache entry it controls.
   *
   * `spark.catalog.clearCache()` remains the blunt per-session
-  * equivalent (what Bench uses between timed runs); releaseAll only
+  * equivalent (what TimeQueries uses between timed runs); releaseAll only
   * touches intermediates this library registered.
   *
   * Concurrency caveat: the registry is process-global, so releaseAll()
@@ -34,7 +34,7 @@ import org.apache.spark.storage.StorageLevel
   * caller's drain can evict another's load-bearing cache mid-query and
   * cost it a recompute; and whatever the LAST pipeline persisted stays
   * resident until someone drains. Single-pipeline drivers (Verify,
-  * Bench, a batch curation job) are the designed use. A service
+  * TimeQueries, a batch curation job) are the designed use. A service
   * running concurrent pipelines in one session should scope release
   * itself: snapshot-and-release around its own stage boundaries, or
   * fall back to `unpersist` on frames it holds directly.
@@ -60,8 +60,7 @@ object Caches {
     * artifacts (directories deleted, next caller rebuilds) — the
     * full-lifecycle teardown a long-lived service calls between
     * tenants; the default leaves staged artifacts alone because they
-    * are the warehouse tables a production run deliberately reuses
-    * (and what Bench measures read-backs against). */
+    * are the warehouse tables a production run deliberately reuses. */
   def releaseAll(blocking: Boolean = false,
                  dropStaged: Boolean = false): Int = {
     var n = 0

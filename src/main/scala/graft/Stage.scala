@@ -172,8 +172,8 @@ object Stage {
     resolve(cacheKey)(build).dir
 
   /** Completed builds of this JVM: (key, artifact) in no particular
-    * order. Bench emits these as `stage_build:` entries so per-artifact
-    * staged cost sits beside the per-query timings it was amortized
+    * order. A traced graftbench `curate` run reports their count, build
+    * time and bytes beside the per-query timings they were amortized
     * out of. */
   def builds: Seq[(String, Artifact)] = {
     import scala.jdk.CollectionConverters._

@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, NullsFirst, NullsLast, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Sort}
 import org.apache.spark.sql.functions.col
@@ -68,14 +68,7 @@ object Verify {
     // always passes exactly two args, so the gate path is unchanged)
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

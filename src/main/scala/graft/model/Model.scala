@@ -52,15 +52,15 @@ final case class LogstashV0(
 )
 
 /** Producer/sink configuration surface (go :114-172). Defaults mirror the
-  * reference exactly. NOTE the reference has a parse bug where
-  * `buffer_size` reads the wrong option string (go :126); we implement the
-  * documented intent (buffer_size parses buffer_size). The reference also
-  * spells the stats-interval key `start_interval` (go :156); we accept
-  * both spellings. */
+  * reference exactly. The reference's `buffer_size` option is dead (its
+  * parse reads the wrong option string, go :126); here the buffer
+  * capacity is the `capacity` of `InMemoryKinesis.create`, so there is no
+  * `buffer_size` option at all. The reference also spells the
+  * stats-interval key `start_interval` (go :156); we accept both
+  * spellings. */
 final case class KinesisSinkConfig(
     streamName: String,
-    addBlocksWhenBufferFull: Boolean = false, // go :115 (we doc as always-block; Spark backpressure is pull-based)
-    bufferSize: Int = 10000,                  // go :123
+    addBlocksWhenBufferFull: Boolean = false, // go :115 (false: drop when full; InMemoryKinesis.tryPut honours it)
     flushIntervalSec: Int = 1,                // go :131
     batchSize: Int = 10,                      // go :139
     maxAttemptsPerRecord: Int = 10,           // go :147
@@ -90,7 +90,6 @@ object KinesisSinkConfig {
     KinesisSinkConfig(
       streamName = streamName,
       addBlocksWhenBufferFull = bool("add_blocks_when_buffer_full", false),
-      bufferSize = int("buffer_size", 10000),
       flushIntervalSec = int("flush_interval", 1),
       batchSize = int("batch_size", 10),
       maxAttemptsPerRecord = int("max_attempts_per_record", 10),

@@ -43,11 +43,6 @@ object Logstash {
       date_format(time, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"),
       "\\.?0+Z$", "Z")
 
-  /** Fixed-width (non-trimming) RFC3339 with 6-digit fraction, for
-    * consumers wanting a sortable constant-width timestamp. */
-  def rfc3339Micros(time: Column): Column =
-    date_format(time, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-
   // ---- P7: omitempty (go :32,:34,:35): empty string / empty map become
   // NULL so `to_json(ignoreNullFields=true)` drops the key like Go does.
   def emptyToNull(c: Column): Column = when(c === "", lit(null)).otherwise(c)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import scala.jdk.CollectionConverters._
 
 /** In-memory stand-in for the sharded stream service (no AWS egress in
   * this environment — SURVEY §7.4). One JVM-global registry of streams;
@@ -124,14 +123,6 @@ object InMemoryKinesis {
       s.notFull.signalAll()
     } finally s.lock.unlock()
   }
-
-  /** Consumer fetch: up to `limit` records from one shard starting at
-    * per-shard sequence `afterSeq` (AT_SEQUENCE_NUMBER analog,
-    * readstream.py:26,32). Read-only — does not ack. */
-  def getRecords(name: String, shard: Int, afterSeq: Long,
-                 limit: Int): Vector[Record] =
-    get(name).shards(shard).iterator.asScala
-      .filter(_.seq >= afterSeq).take(limit).toVector
 
   /** Current record count (== next sequence number) per shard — the
     * per-shard high-water marks the streaming source admits against. */

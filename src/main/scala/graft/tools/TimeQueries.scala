@@ -1,43 +1,44 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: time a SUBSET of SparkEntry.queries with exactly the bench
-  * session and action (.count(), caches cleared between runs), min-of-N.
-  * Usage: runMain graft.tools.TimeQueries q1 q2 ...  (env:
-  * SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_RUNS). */
+import graft.{Caches, Sessions, SparkEntry}
+
+/** Dev tool: ad-hoc timing of named SparkEntry.queries (all of them when
+  * none are named) to full output — `write.format("noop")` computes every
+  * output column and keeps the final sort. One untimed warm-up pass
+  * (stages artifacts, JIT), then min of 3 runs per query, caches cleared
+  * before each run. Queries that throw are listed and the tool exits 1.
+  * The repo's benchmark is graftbench (graftbench/README.md).
+  * Usage: runMain graft.tools.TimeQueries q1 q2 ...
+  * (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS). */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = if (args.nonEmpty) args.toSeq
-                else graft.SparkEntry.queries.keys.toSeq
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      graft.Caches.releaseAll()
+    val spark = Sessions.local()
+    val queries = SparkEntry.queries
+    val names = if (args.nonEmpty) args.toSeq else queries.keys.toSeq
+    val failed = collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOnce(name: String): Option[Double] = {
+      Caches.releaseAll()
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-        println(s"[timequeries] ERR ${e.getClass.getSimpleName}: ${e.getMessage}")
-        return -1.0 }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        failed.getOrElseUpdate(name, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+        None
+      }
     }
-    // warmup (stages artifacts, JIT)
-    names.foreach(n => timeOnce(graft.SparkEntry.queries(n)))
-    val out = names.map { n =>
-      val ts = (1 to runs).map(_ => timeOnce(graft.SparkEntry.queries(n)))
-        .filter(_ >= 0)
-      val mn = if (ts.isEmpty) -1.0 else ts.min
-      println(f"[timequeries] $n%-36s min=$mn%8.4f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
-      n -> mn
+    names.foreach(timeOnce)
+    val mins = names.filterNot(failed.contains).flatMap { n =>
+      val ts = Seq.fill(3)(timeOnce(n)).flatten
+      if (ts.nonEmpty)
+        println(f"[timequeries] $n%-36s min=${ts.min}%8.4f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
+      ts.minOption
     }
-    println("[timequeries] TOTAL " + f"${out.map(_._2).filter(_ >= 0).sum}%.3f")
+    println(f"[timequeries] TOTAL ${mins.sum}%.3f (${mins.size} queries)")
+    failed.foreach { case (n, err) => println(s"[timequeries] FAILED $n: $err") }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

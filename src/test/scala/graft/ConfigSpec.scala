@@ -6,13 +6,12 @@ import graft.model.KinesisSinkConfig
 
 /** §1.4 configuration-as-schema: option parsing mirrors
   * getKinesisConfig (logspoutkinesis.go:114-172) including the
-  * documented divergences (buffer_size parse bug, start_interval
-  * misspelling — SURVEY §1.4). */
+  * documented divergences (the dead buffer_size option is not parsed at
+  * all, start_interval misspelling — SURVEY §1.4). */
 class ConfigSpec extends AnyFunSuite {
 
   test("defaults mirror the reference exactly") {
     val c = KinesisSinkConfig.fromOptions("s", Map.empty, env = Map.empty)
-    assert(c.bufferSize == 10000)        // go :123
     assert(c.flushIntervalSec == 1)      // go :131
     assert(c.batchSize == 10)            // go :139
     assert(c.maxAttemptsPerRecord == 10) // go :147
@@ -25,11 +24,11 @@ class ConfigSpec extends AnyFunSuite {
   test("options parse; unparsable values fall back to defaults") {
     val c = KinesisSinkConfig.fromOptions("s", Map(
       "batch_size" -> "25", "max_attempts_per_record" -> "3",
-      "buffer_size" -> "not-a-number", "flush_interval" -> ""),
+      "num_shards" -> "not-a-number", "flush_interval" -> ""),
       env = Map.empty)
     assert(c.batchSize == 25)
     assert(c.maxAttemptsPerRecord == 3)
-    assert(c.bufferSize == 10000)   // unparsable -> default
+    assert(c.numShards == 4)        // unparsable -> default
     assert(c.flushIntervalSec == 1) // empty -> default
   }
 

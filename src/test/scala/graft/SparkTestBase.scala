@@ -5,16 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM, Test/fork := true). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

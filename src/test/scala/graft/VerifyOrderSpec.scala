@@ -21,6 +21,15 @@ class VerifyOrderSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  test("every gated query has a DuckDB twin and every twin a query") {
+    // check_oracle.py iterates the oracle keys only: a query without a
+    // twin would pass the gate unchecked
+    val q = SparkEntry.queries.keySet
+    val o = SparkEntry.oracleSql.keySet
+    assert(q == o, s"queries without a twin: ${(q -- o).toSeq.sorted}; " +
+      s"twins without a query: ${(o -- q).toSeq.sorted}")
+  }
+
   test("every query ends in a liftable global ORDER BY") {
     try {
       SparkEntry.queries.foreach { case (name, fn) =>
