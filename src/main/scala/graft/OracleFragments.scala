@@ -1,9 +1,10 @@
 package graft
 
 /** DuckDB SQL twins of the Scala derivations — shared fragments composed
-  * into SparkEntry.oracleSql. Any change to graft.sources.LogSource or
-  * graft.operators.Logstash must be mirrored here (and vice versa): the
-  * driver hash-compares Spark results against these on the same parquet.
+  * into the twins of SparkEntry.queries. Any change to
+  * graft.sources.LogSource or graft.operators.Logstash must be mirrored
+  * here (and vice versa): the correctness gate hash-compares Spark
+  * results against these on the same parquet.
   */
 object OracleFragments {
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Log
 import org.apache.spark.sql.functions.col
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json (every registry entry's DuckDB twin, by name), for
+  * the DuckDB compare.
   *
   * The driver's hash is ROW-ORDER-sensitive: the written parquet must
   * enumerate rows exactly as the oracle SQL's ORDER BY does. Every
@@ -19,7 +20,8 @@ import org.apache.spark.sql.functions.col
   * order-stability fragility. So make the guarantee explicit: lift the
   * query's own sort keys off its analyzed plan and re-apply them as a
   * partition-local sort AFTER the coalesce, making row order the last
-  * operator's contract, whatever the upstream plan did.
+  * operator's contract, whatever the upstream plan did. A query whose
+  * order cannot be lifted fails like a query that throws.
   */
 object Verify {
 
@@ -50,15 +52,15 @@ object Verify {
   }
 
   /** One partition, rows in the query's own declared order — enforced
-    * by a local sort directly under the write. VerifyOrderSpec asserts
-    * every query's keys are liftable, so the fallback branch (write
-    * whatever order coalesce produced) never triggers at HEAD. */
-  def orderedSingleFile(df: DataFrame): (DataFrame, Boolean) = {
+    * by a local sort directly under the write. Refuses (throws) a frame
+    * without a liftable global ORDER BY: its written row order would be
+    * whatever coalesce produced. */
+  def orderedSingleFile(df: DataFrame): DataFrame = {
     val keys = topSortKeys(df.queryExecution.analyzed)
     val cols = sortCols(keys)
-    if (keys.nonEmpty && cols.size == keys.size)
-      (df.coalesce(1).sortWithinPartitions(cols: _*), true)
-    else (df.coalesce(1), false)
+    require(keys.nonEmpty && cols.size == keys.size,
+      "no liftable global ORDER BY: written row order would be undefined")
+    df.coalesce(1).sortWithinPartitions(cols: _*)
   }
 
   def main(args: Array[String]): Unit = {
@@ -77,18 +79,13 @@ object Verify {
     require(selected.nonEmpty,
       s"Verify selected zero queries (registry=${SparkEntry.queries.size}," +
         s" only=$only) — refusing to emit an empty correctness artifact")
-    require(SparkEntry.oracleSql.nonEmpty,
-      "SparkEntry.oracleSql is empty — refusing to emit an empty oracle map")
-    selected.foreach { case (name, fn) =>
+    selected.foreach { case (name, query) =>
       // release the previous query's tracked persists: 65 queries in
       // one session would otherwise stack cache entries + plan handles
       Caches.releaseAll()
       val t0 = System.nanoTime()
       try {
-        val (out, enforced) = orderedSingleFile(fn(spark, sfDir))
-        if (!enforced)
-          System.err.println(s"[verify] $name WARN: no liftable ORDER BY — row order not re-enforced")
-        out.write.mode("overwrite").parquet(s"$outDir/$name")
+        orderedSingleFile(query(spark, sfDir)).write.mode("overwrite").parquet(s"$outDir/$name")
         System.err.println(
           f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.2fs")
       }
@@ -114,8 +111,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.queries
+      .map { case (k, v) => s"${q(k)}: ${q(v.twin)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -21,13 +21,13 @@ class VerifyOrderSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("every gated query has a DuckDB twin and every twin a query") {
-    // check_oracle.py iterates the oracle keys only: a query without a
-    // twin would pass the gate unchecked
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q == o, s"queries without a twin: ${(q -- o).toSeq.sorted}; " +
-      s"twins without a query: ${(o -- q).toSeq.sorted}")
+  test("every registry twin is non-blank SQL") {
+    // Verify writes oracle_sql.json from these twins and check_oracle.py
+    // iterates its keys: a blank twin, or an empty registry (the r18 `{}`
+    // artifact), would pass the gate unchecked. Forces every lazy twin.
+    assert(SparkEntry.queries.nonEmpty, "empty registry")
+    val blank = SparkEntry.queries.collect { case (n, q) if q.twin.trim.isEmpty => n }
+    assert(blank.isEmpty, s"blank twins: ${blank.toSeq.sorted}")
   }
 
   test("every query ends in a liftable global ORDER BY") {
@@ -84,11 +84,18 @@ class VerifyOrderSpec extends SparkTestBase {
     val df = spark.range(0, 1000).select(col("id"))
       .repartition(7, pmod(col("id") * 37 + 11, lit(7)))
       .orderBy("id")
-    val (out, enforced) = Verify.orderedSingleFile(df)
-    assert(enforced, "plain orderBy(id) keys must be liftable")
+    val out = Verify.orderedSingleFile(df)
     assert(out.rdd.getNumPartitions == 1)
     val ids = out.as[Long].collect()
     assert(ids.sameElements(ids.sorted), "written order must be the declared ORDER BY")
+  }
+
+  test("orderedSingleFile refuses a frame with no ORDER BY") {
+    // Verify turns the refusal into a failed query: stale output
+    // deleted, `[verify] <name> failed` logged
+    val e = intercept[IllegalArgumentException](
+      Verify.orderedSingleFile(spark.range(0, 100).toDF()))
+    assert(e.getMessage.contains("ORDER BY"))
   }
 
   test("topSortKeys looks through a trailing LIMIT (fetch_limit shape)") {

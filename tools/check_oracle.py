@@ -21,14 +21,17 @@ for a in sys.argv:
     if a.startswith("--only="):
         ONLY = a.split("=", 1)[1]
 
+# the checkout that holds this script: its code is the code under check
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 if "--skip-verify" not in sys.argv:
     cmd = f'runMain graft.Verify {SF} {OUT}' + (f' {ONLY}' if ONLY else '')
     r = subprocess.run(
         ["sbt", "-batch", cmd],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=REPO, capture_output=True, text=True, timeout=1800)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:]); sys.exit(1)
-    for line in r.stdout.splitlines():
+    for line in (r.stdout + r.stderr).splitlines():
         if "[verify]" in line:
             print(line)
 
@@ -117,5 +120,5 @@ compared = sum(1 for name in oracle if not (ONLY and name not in ONLY.split(",")
 if compared == 0:
     print("FAIL: zero queries compared — empty selection is not a pass")
     sys.exit(1)
-print(f"\n{'ALL GREEN' if fails == 0 else f'{fails} FAILURES'} / {len(oracle)} queries")
+print(f"\n{'ALL GREEN' if fails == 0 else f'{fails} FAILURES'} / {compared} queries")
 sys.exit(1 if fails else 0)
