@@ -40,6 +40,14 @@ import graft.streaming.InMemoryKinesis
   *   UNPLANNED and are fetched by later batches — the reference's own
   *   semantics (the 500-record cap delays, never drops). Batch scans
   *   honor the same option as a per-shard top-N.
+  * - S9/S10 (print loop and its 5-reads/s/shard sleep,
+  *   readstream.py:34-38): not source options but the caller's
+  *   `writeStream` settings on this source — `format("console")` is the
+  *   print loop and `Trigger.ProcessingTime(200L)` the sleep.
+  *
+  * The producer side feeds it through `ProducerPipeline.start`, which
+  * puts into the same `InMemoryKinesis` stream: that is the one
+  * producer→stream→consumer path.
   *
   * Single-JVM caveat: the backing store is `InMemoryKinesis` (local[*]
   * executors share the JVM). A production implementation swaps the

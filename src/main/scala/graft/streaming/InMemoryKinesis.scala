@@ -32,7 +32,8 @@ object InMemoryKinesis {
   final class Stream(val numShards: Int, val capacity: Int) {
     val shards: Vector[java.util.Queue[Record]] =
       Vector.fill(numShards)(new java.util.concurrent.ConcurrentLinkedQueue[Record]())
-    /** Next sequence number per shard == current record count per shard. */
+    /** Next sequence number per shard == count of records already in
+      * the shard's queue (advanced only after the append). */
     val shardSeqs: Vector[AtomicLong] = Vector.fill(numShards)(new AtomicLong(0L))
     /** Un-acked backlog across all shards (the producer-buffer model). */
     val size = new AtomicInteger(0)
@@ -68,12 +69,12 @@ object InMemoryKinesis {
 
   def delete(name: String): Unit = streams.remove(name)
 
-  /** One put attempt of one record to one shard. Per-shard ordering
-    * (queue order == sequence order) is guaranteed under ONE WRITER
-    * PER SHARD — which every library path provides (the producer
-    * repartitions by shard, the scan-fixture put sorts one task per
-    * shard), matching real Kinesis's per-shard ordered-put contract.
-    * Returns false on an
+  /** One put attempt of one record to one shard. Admission, sequence
+    * assignment, the append and the publish of the new shard count all
+    * happen under the stream's lock, so a count `shardCounts` returns
+    * only covers records already in their queue (a consumer never plans
+    * a record it cannot read), and queue order == sequence order for any
+    * number of writers per shard. Returns false on an
     * injected transient failure (caller retries) or when the stream is
     * at capacity and blocking is disabled (caller drops). With blocking
     * enabled the caller parks until `ack` frees space (S13 block mode,
@@ -83,8 +84,9 @@ object InMemoryKinesis {
     val s = get(name)
     s.putAttempts.incrementAndGet()
     if (s.failNextPuts.getAndUpdate(n => math.max(0, n - 1)) > 0) return false
-    // capacity admission under the lock; blocked producers await the
-    // ack signal (no busy-wait — the thread parks in WAITING state)
+    val sh = shard % s.numShards
+    // blocked producers await the ack signal (no busy-wait — the thread
+    // parks in WAITING state)
     s.lock.lock()
     try {
       if (s.size.get() >= s.capacity) {
@@ -92,12 +94,11 @@ object InMemoryKinesis {
         while (s.size.get() >= s.capacity) s.notFull.await()
       }
       s.size.incrementAndGet()
+      // append first, then publish the count (see the doc above)
+      val seq = s.shardSeqs(sh).get()
+      s.shards(sh).add(Record(seq, partitionKey, data))
+      s.shardSeqs(sh).set(seq + 1L)
     } finally s.lock.unlock()
-    // append outside the lock: per-shard order is guaranteed by the
-    // one-writer-per-shard contract, not by this lock
-    val sh = shard % s.numShards
-    s.shards(sh).add(Record(s.shardSeqs(sh).getAndIncrement(),
-      partitionKey, data))
     s.delivered.incrementAndGet()
     true
   }
@@ -128,6 +129,4 @@ object InMemoryKinesis {
     * per-shard high-water marks the streaming source admits against. */
   def shardCounts(name: String): Vector[Long] =
     get(name).shardSeqs.map(_.get())
-
-  def shardSizes(name: String): Vector[Int] = get(name).shards.map(_.size)
 }

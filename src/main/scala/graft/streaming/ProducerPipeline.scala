@@ -113,20 +113,4 @@ object ProducerPipeline {
     }
     query
   }
-
-  /** File-backed variant: the sharded stream as a directory of JSON
-    * files (what ConsumerPipeline reads) — the durable analog of the
-    * in-memory service for producer→consumer end-to-end runs. */
-  def startToFiles(spark: SparkSession, srcDir: String,
-                   cfg: KinesisSinkConfig, outDir: String,
-                   checkpointDir: String): StreamingQuery = {
-    val msgs = LogSource.streamRouterMessages(spark, srcDir)
-    Logstash.producerPayload(msgs, cfg.dockerHost, cfg.useV0Layout)
-      .writeStream
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(cfg.flushIntervalSec * 1000L))
-      .start()
-  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.{KinesisLikeScan, ShardOffsets}
+import graft.sources.{KinesisLikeScan, ShardOffsets, ShardRange, ShardReaderFactory}
 import graft.streaming.InMemoryKinesis
 
 /** DSv2 connector: registration by short name (S1), one partition per
@@ -136,10 +136,10 @@ class KinesisSourceSpec extends SparkTestBase {
   }
 
   test("S7: restart from checkpoint resumes per-shard cursors (no dup, no gap)") {
-    // memory sink cannot recover checkpoints — use a file sink, as the
-    // consumer resume test does. Run 1 consumes 20 records unevenly;
-    // run 2 (same checkpoint) must deliver ONLY the records added
-    // in between, resuming each shard at its own deserialized cursor.
+    // memory sink cannot recover checkpoints — use a file sink. Run 1
+    // consumes 20 records unevenly; run 2 (same checkpoint) must deliver
+    // ONLY the records added in between, resuming each shard at its own
+    // deserialized cursor.
     val dir = java.nio.file.Files.createTempDirectory("dsv2-ckpt").toString
     val sink = s"$dir/sink"; val ckpt = s"$dir/ckpt"
     InMemoryKinesis.delete("dsv2-restart")
@@ -286,5 +286,36 @@ class KinesisSourceSpec extends SparkTestBase {
     assert(spark.table("dsv2drain").count() == 50L)
     assert(s.size.get() <= 10,
       "batch-1 commit acked its 40 records (only the tail batch may remain un-acked)")
+  }
+
+  test("a counted record is always readable while a producer puts (no planned-but-unread gap)") {
+    // one producer appends to one shard while this thread does what each
+    // micro-batch does: take the shard count as the batch end, then read
+    // [from, end) through the shard reader. A count published before its
+    // record is in the queue plans a record the read misses, and the
+    // committed offset then moves past it for good.
+    val name = "dsv2-race"
+    val perRound = 50000
+    var missed = 0L
+    (0 until 8).foreach { _ =>
+      InMemoryKinesis.delete(name)
+      InMemoryKinesis.create(name, numShards = 1, capacity = perRound)
+      val producer = new Thread(() => (0 until perRound).foreach(i =>
+        InMemoryKinesis.tryPut(name, 0, "k", s"r$i", block = false)))
+      producer.start()
+      var from = 0L
+      while (from < perRound) {
+        val until = InMemoryKinesis.shardCounts(name)(0)
+        val reader = new ShardReaderFactory()
+          .createReader(ShardRange(name, 0, from, until))
+        var read = 0L
+        while (reader.next()) read += 1
+        reader.close()
+        missed += (until - from) - read
+        from = until
+      }
+      producer.join()
+    }
+    assert(missed == 0L, s"$missed planned records were not in the queue")
   }
 }

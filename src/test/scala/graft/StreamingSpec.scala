@@ -3,12 +3,13 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.model.KinesisSinkConfig
-import graft.streaming.{ConsumerPipeline, InMemoryKinesis, ProducerPipeline}
+import graft.streaming.{InMemoryKinesis, ProducerPipeline}
 
 /** The streaming shell end-to-end (S2 stream, S3 batched put, S4
-  * routing, S7 offsets, S9 console, S11 trigger, S12 retry, S13
-  * backpressure config, P13 mute/unmute) against the in-memory sharded
-  * stream and a file-backed stream directory. */
+  * routing, S7 offsets, S8 fetch cap, S9 console, S11 trigger, S12
+  * retry, S13 backpressure config, P13 mute/unmute) on the one
+  * producer→consumer path: `ProducerPipeline.start` puts into the
+  * in-memory sharded stream, the `graft-kinesis` source reads it back. */
 class StreamingSpec extends SparkTestBase {
 
   /** Stage the sf0.001 events fixture as a file-stream source dir. */
@@ -35,8 +36,8 @@ class StreamingSpec extends SparkTestBase {
     assert(s.dropped.get() == 0L)
     // partition_key is the constant docker_host -> ONE shard gets all
     // records (the reference's actual behavior: one key -> one shard)
-    assert(InMemoryKinesis.shardSizes("t-basic").sum == 1000)
-    assert(InMemoryKinesis.shardSizes("t-basic").count(_ > 0) == 1)
+    assert(InMemoryKinesis.shardCounts("t-basic").sum == 1000)
+    assert(InMemoryKinesis.shardCounts("t-basic").count(_ > 0) == 1)
   }
 
   test("transient failures are retried within budget; one muted log (S12,P13)") {
@@ -70,60 +71,57 @@ class StreamingSpec extends SparkTestBase {
     assert(s.errorLogLines.get() == 1L)
   }
 
-  test("consumer reads every produced record with a fetch cap (S8)") {
-    val src = stageSource()
-    val out = tmp("stream-out")
-    val cfg = KinesisSinkConfig(streamName = "unused", numShards = 4)
-    val p = ProducerPipeline.startToFiles(spark, src, cfg, out, tmp("ckpt"))
-    p.processAllAvailable(); p.stop()
-
-    val c1 = ConsumerPipeline.startMemory(spark, out, "consumed1",
-      tmp("consumer-ckpt"), maxFilesPerTrigger = 1)
-    c1.processAllAvailable(); c1.stop()
-    assert(spark.table("consumed1").count() == 1000L)
-    val sample = spark.table("consumed1").select("log_json").head().getString(0)
-    assert(sample.contains("\"@timestamp\"") && sample.contains("\"docker\""))
-  }
-
-  test("consumer resumes from checkpointed offsets without re-reading (S6/S7)") {
-    // file sink supports checkpoint recovery (memory sink does not):
-    // a second run over the SAME checkpoint must deliver zero new rows
-    val src = stageSource()
-    val out = tmp("stream-out-r")
-    val cfg = KinesisSinkConfig(streamName = "unused", numShards = 4)
-    val p = ProducerPipeline.startToFiles(spark, src, cfg, out, tmp("ckpt"))
-    p.processAllAvailable(); p.stop()
-
-    val ckpt = tmp("resume-ckpt")
-    val sink = tmp("resume-sink")
-    def runOnce(): Unit = {
-      val q = ConsumerPipeline.readRecords(spark, out).writeStream
-        .format("json").option("path", sink)
-        .option("checkpointLocation", ckpt).start()
-      q.processAllAvailable(); q.stop()
-    }
-    runOnce()
-    val n1 = spark.read.schema(ConsumerPipeline.recordSchema).json(sink).count()
-    runOnce() // same checkpoint: offsets already committed
-    val n2 = spark.read.schema(ConsumerPipeline.recordSchema).json(sink).count()
-    assert(n1 == 1000L)
-    assert(n2 == 1000L, "resumed run must not duplicate records")
-  }
-
   test("console sink smoke (S9/S10)") {
+    // readstream.py's print loop (S9) and its 200 ms sleep (S10) are the
+    // consumer query's sink and trigger on the graft-kinesis source
     val src = stageSource()
-    val out = tmp("stream-out2")
-    val cfg = KinesisSinkConfig(streamName = "unused", numShards = 4)
-    val p = ProducerPipeline.startToFiles(spark, src, cfg, out, tmp("ckpt"))
+    InMemoryKinesis.delete("t-console")
+    InMemoryKinesis.create("t-console", numShards = 4)
+    val cfg = KinesisSinkConfig(streamName = "t-console", numShards = 4)
+    val p = ProducerPipeline.start(spark, src, cfg, tmp("ckpt"))
     p.processAllAvailable(); p.stop()
-    val c = ConsumerPipeline.startConsole(spark, out, tmp("console-ckpt"))
-    c.processAllAvailable(); c.stop() // output on stdout; no exception = pass
+    val c = spark.readStream.format("graft-kinesis")
+      .option("stream", "t-console").load()
+      .writeStream.format("console")
+      .option("truncate", "false")
+      .option("checkpointLocation", tmp("console-ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(200L))
+      .start()
+    c.processAllAvailable(); c.stop() // output on stdout
+    assert(c.recentProgress.map(_.numInputRows).sum == 1000L)
+  }
+
+  test("consumer reads every produced record with a fetch cap (S8)") {
+    // readstream.py's per-fetch cap on the graft-kinesis source: the
+    // producer fills the stream first, then a capped consumer drains it
+    val src = stageSource()
+    InMemoryKinesis.delete("t-cap8")
+    InMemoryKinesis.create("t-cap8", numShards = 4)
+    val cfg = KinesisSinkConfig(streamName = "t-cap8", numShards = 4)
+    val p = ProducerPipeline.start(spark, src, cfg, tmp("ckpt"))
+    p.processAllAvailable(); p.stop()
+    val c = spark.readStream.format("graft-kinesis")
+      .option("stream", "t-cap8").option("maxRecordsPerFetch", 100).load()
+      .writeStream.format("memory").queryName("consumed1")
+      .option("checkpointLocation", tmp("consumer-ckpt"))
+      .start()
+    c.processAllAvailable(); c.stop()
+    assert(spark.table("consumed1").count() == 1000L)
+    // the constant partition key sends all 1000 records to one shard, so
+    // the cap of 100 per shard per fetch needs at least 10 batches
+    val batches = c.recentProgress.map(_.numInputRows).filter(_ > 0)
+    assert(batches.length >= 10, s"batch sizes: ${batches.mkString(",")}")
+    assert(batches.max <= 100L, s"batch sizes: ${batches.mkString(",")}")
+    val sample = spark.table("consumed1").select("data").head().getString(0)
+    assert(sample.contains("\"@timestamp\"") && sample.contains("\"docker\""))
   }
 
   test("full loop: producer pipeline → sharded stream → DSv2 consumer (S2-S9)") {
     // the reference's complete path in one test: file-stream source →
     // logstash projection → routed batched put into the sharded store,
-    // then read back through the graft-kinesis streaming connector
+    // then read back through the graft-kinesis streaming connector. The
+    // consumer polls while the producer puts, so a record counted before
+    // it is readable would be lost.
     val src = stageSource()
     InMemoryKinesis.delete("t-e2e")
     InMemoryKinesis.create("t-e2e", numShards = 4)
@@ -155,7 +153,7 @@ class StreamingSpec extends SparkTestBase {
       InMemoryKinesis.tryPut("t-cap", 0, "k", s"rec-$i", block = false)
     }
     assert(s.delivered.get() == 10L)
-    assert(InMemoryKinesis.shardSizes("t-cap").sum == 10)
+    assert(InMemoryKinesis.shardCounts("t-cap").sum == 10)
   }
 
   /** A micro-batch frame shaped like producerPayload's output. */
@@ -177,7 +175,7 @@ class StreamingSpec extends SparkTestBase {
     // foreachBatch replay after a restart: same frame, same batch id
     ProducerPipeline.deliverBatch(batch, cfg, batchId = 7L)
     assert(s.delivered.get() == 100L, "replayed batch must not double-write")
-    assert(InMemoryKinesis.shardSizes("t-idem").sum == 100)
+    assert(InMemoryKinesis.shardCounts("t-idem").sum == 100)
     // genuinely new data under a new id still flows
     ProducerPipeline.deliverBatch(payloadBatch(40), cfg, batchId = 8L)
     assert(s.delivered.get() == 140L)

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 
 import graft.model.{KinesisSinkConfig, RouterMessage}
 import graft.operators.{Logstash, Routing}
-import graft.streaming.ProducerPipeline
+import graft.streaming.{InMemoryKinesis, ProducerPipeline}
 
 /** Typed Dataset boundary, the streaming V0-layout config path, and the
-  * partitioned file layout (S4's durable analog). */
+  * shard-partitioned file layout of a batch write (S4 routing). */
 class TypedApiSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -35,14 +35,17 @@ class TypedApiSpec extends SparkTestBase {
     val src = Files.createTempDirectory("typed-src")
     Files.copy(Paths.get("/root/testdata/sf0.001/events.parquet"),
       src.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val out = Files.createTempDirectory("typed-out").toString
-    val cfg = KinesisSinkConfig.fromOptions("s",
+    val cfg = KinesisSinkConfig.fromOptions("t-v0",
       Map("use_v0_layout" -> "true"), env = Map.empty)
     assert(cfg.useV0Layout)
-    val q = ProducerPipeline.startToFiles(spark, src.toString, cfg, out,
+    InMemoryKinesis.delete(cfg.streamName)
+    InMemoryKinesis.create(cfg.streamName, cfg.numShards)
+    val q = ProducerPipeline.start(spark, src.toString, cfg,
       Files.createTempDirectory("typed-ckpt").toString)
     q.processAllAvailable(); q.stop()
-    val sample = spark.read.json(out).select("log_json").head().getString(0)
+    val sample = spark.read.format("graft-kinesis")
+      .option("stream", cfg.streamName).load()
+      .select("data").head().getString(0)
     assert(sample.contains("\"@fields\"") && sample.contains("\"@message\""),
       s"expected V0 layout, got: ${sample.take(120)}")
   }
