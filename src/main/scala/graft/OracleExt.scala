@@ -709,7 +709,7 @@ object OracleExt {
 
   /** The unrolled damped ppm power rounds shared by the pagerank and
     * textrank twins — references CTEs `edges`, `nodes`, `nc`, `r0`,
-    * the exact SQL of Graph.pagerankCore's per-round update. */
+    * Graph.pagerankCore's per-round update, written as SQL. */
   private def pagerankRounds(iters: Int): String =
     (0 until iters).map { k =>
       s"""

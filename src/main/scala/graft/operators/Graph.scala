@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Graph centrality over the behavioral transition graph — PageRank
   * (Brin & Page 1998) on the event-type digraph whose edges are
@@ -22,12 +24,14 @@ import org.apache.spark.sql.functions._
   * both engines leak IDENTICALLY, which is what the gate needs.
   *
   * Scale shape: one corpus pass (the per-user lead window — user-keyed
-  * shuffle) collapses to the vocab²-bounded edge table; every power
-  * iteration joins the vocab-sized rank frame to the cached edge table
-  * and re-aggregates — corpus size never reappears. Rank frames are
-  * eagerly localCheckpoint'd per round (vocab-sized rows): r is
-  * referenced once per round so the plan grows only linearly, but 5
-  * rounds of join+agg+outer-join lineage is still worth truncating. */
+  * shuffle) collapses to the vocab²-bounded edge table; it and the node
+  * list are collected once and the power iteration runs on the driver,
+  * so no round costs a Spark job. Bounded domain: nodes are the distinct
+  * event types (5 at sf0.1) or textrankTerms' terms with ≥ minPairCount
+  * co-occurrences after the df cap (31 nodes, 930 edges at sf0.1);
+  * edges ≤ nodes², and the driver holds O(edges) longs — the
+  * aggregate-sized collect class of KMeans.opqChoose, the shape of
+  * MLlib k-means' driver-side centers. Only Spark reads the corpus. */
 object Graph {
 
   def pagerankEvents(events: DataFrame, iters: Int = 5): DataFrame =
@@ -35,40 +39,50 @@ object Graph {
       events.select(col("event_type").as("node")).distinct(), iters)
       .select(col("node").as("event_type"), col("r_ppm").as("rank_ppm"))
 
-  /** The damped ppm power iteration over an arbitrary weighted
-    * (src, dst, c) edge frame plus a node frame — the engine under
-    * [[pagerankEvents]] and TextAnalysis.textrankTerms (identical
-    * update, so both oracle twins unroll the SAME round SQL).
-    * Returns (node, r_ppm). */
+  /** The damped ppm power iteration over a weighted (src, dst, c) edge
+    * frame and a string node frame — the engine under [[pagerankEvents]],
+    * [[pprEvents]] and TextAnalysis.textrankTerms, whose twins unroll
+    * the same round in SQL. p_ppm stays a Spark expression, so it
+    * rounds as the twin's; the rounds run on the driver over the
+    * collected lists (bounded, see the header) in the twin's Long
+    * arithmetic. An edge with a null or unknown endpoint takes no part,
+    * as in the twin's equi-joins. `restart` gives the init and teleport
+    * vectors. Returns a local (node, r_ppm) frame. */
   // LIVE (r20: un-gamed — the r19 "pagerank_scores" staging made the
   // gated queries read back their own converged output; the power
   // iteration IS the query, so it runs per call again. The corpus pass
   // stays amortized behind the staged transition-pair artifact.)
   private[graft] def pagerankCore(pairs: DataFrame, nodes0: DataFrame,
-                                  iters: Int): DataFrame = {
-    val edges = graft.Caches.track(
-      pairs.join(pairs.groupBy("src").agg(sum(col("c")).as("out")), "src")
-        .select(col("src"), col("dst"),
-          expr("(1000000 * c) div out").as("p_ppm")))
-    val nodes = graft.Caches.track(nodes0)
-    val nc = nodes.agg(count(lit(1)).as("n"))
-
-    var r = nodes.crossJoin(broadcast(nc))
-      .select(col("node"), expr("1000000 div n").as("r_ppm"))
-      .localCheckpoint()
+      iters: Int, restart: Array[String] => (Array[Long], Array[Long])
+        = uniform): DataFrame = {
+    val ns = nodes0.select("node").collect().map(_.getString(0))
+    val at = ns.zipWithIndex.filter(_._1 != null).toMap
+    val edges = pairs
+      .join(pairs.groupBy("src").agg(sum(col("c")).as("out")), "src")
+      .select(col("src"), col("dst"),
+        expr("(1000000 * c) div out").as("p_ppm"))
+      .collect().flatMap { e =>
+        for (s <- at.get(e.getString(0)); d <- at.get(e.getString(1)))
+          yield (s, d, e.getLong(2))
+      }
+    val (init, teleport) = restart(ns)
+    var r = init
     (0 until iters).foreach { _ =>
-      val contrib = r.join(edges, col("node") === col("src"))
-        .groupBy(col("dst"))
-        .agg(sum(col("r_ppm") * col("p_ppm")).as("s"))
-      r = nodes.join(contrib, col("node") === col("dst"), "left")
-        .crossJoin(broadcast(nc))
-        .select(col("node"),
-          expr("(850000 * (coalesce(s, 0) div 1000000)) div 1000000" +
-            " + (150000 div n)").as("r_ppm"))
-        .localCheckpoint()
+      val s = new Array[Long](ns.length)
+      edges.foreach { case (a, b, p) =>
+        s(b) = Math.addExact(s(b), Math.multiplyExact(r(a), p))
+      }
+      r = Array.tabulate(ns.length)(i =>
+        850000L * (s(i) / 1000000L) / 1000000L + teleport(i))
     }
-    r
+    nodes0.sparkSession.createDataFrame(
+      java.util.Arrays.asList(ns.indices.map(i => Row(ns(i), r(i))): _*),
+      StructType(Seq(nodes0.schema("node"),
+        StructField("r_ppm", LongType, nullable = false))))
   }
+
+  private def uniform(ns: Array[String]): (Array[Long], Array[Long]) =
+    (ns.map(_ => 1000000L / ns.length), ns.map(_ => 150000L / ns.length))
 
   /** Personalized PageRank (the random-walk-with-restart proximity of
     * Haveliwala 2002/Jeh-Widom 2003) from a deterministic seed — the
@@ -76,45 +90,23 @@ object Graph {
     * teleports uniformly ("globally important"), PPR teleports to the
     * SEED only, so scores rank nodes by proximity to it (the
     * recommendation / related-items primitive). Same integer ppm
-    * discipline; the restart term is 150000 on the seed and 0
-    * elsewhere (init likewise concentrates the full 1e6 on the seed),
-    * so every operand stays non-negative and both engines truncate
-    * identically. Same scale shape as the shared core: corpus appears
-    * once via the staged transition pairs, every round is
-    * vocab²-bounded, rank frames localCheckpoint per round. */
+    * discipline and the same driver-side core: the restart term is
+    * 150000 on the seed and 0 elsewhere (init likewise concentrates the
+    * full 1e6 on the seed), so every operand stays non-negative and
+    * both engines truncate identically. The seed is the node Spark's
+    * `min` (and the twin's) picks: binary UTF-8 order via UTF8String,
+    * not java.lang.String's UTF-16 order; a null type is never it. */
   def pprEvents(events: DataFrame, iters: Int = 5): DataFrame =
     // LIVE (r20: un-gamed — see pagerankCore)
-    pprEventsLive(events, iters).orderBy("event_type")
-
-  private def pprEventsLive(events: DataFrame, iters: Int): DataFrame = {
-    val pairs = Events.stagedTransitionPairs(events)
-    val edges = graft.Caches.track(
-      pairs.join(pairs.groupBy("src").agg(sum(col("c")).as("out")), "src")
-        .select(col("src"), col("dst"),
-          expr("(1000000 * c) div out").as("p_ppm")))
-    val nodes = graft.Caches.track(
-      events.select(col("event_type").as("node")).distinct())
-    val seed = nodes.agg(min(col("node")).as("seed"))
-
-    var r = nodes.crossJoin(broadcast(seed))
-      .select(col("node"),
-        when(col("node") === col("seed"), 1000000L).otherwise(0L)
-          .as("r_ppm"))
-      .localCheckpoint()
-    (0 until iters).foreach { _ =>
-      val contrib = r.join(edges, col("node") === col("src"))
-        .groupBy(col("dst"))
-        .agg(sum(col("r_ppm") * col("p_ppm")).as("s"))
-      r = nodes.join(contrib, col("node") === col("dst"), "left")
-        .crossJoin(broadcast(seed))
-        .select(col("node"),
-          (expr("(850000 * (coalesce(s, 0) div 1000000)) div 1000000") +
-            when(col("node") === col("seed"), 150000L).otherwise(0L))
-            .as("r_ppm"))
-        .localCheckpoint()
-    }
-    r.select(col("node").as("event_type"), col("r_ppm").as("ppr_ppm"))
-  }
+    pagerankCore(Events.stagedTransitionPairs(events),
+        events.select(col("event_type").as("node")).distinct(), iters,
+        { ns =>
+          val seed = ns.filter(_ != null).minByOption(UTF8String.fromString)
+          def onSeed(v: Long) = ns.map(n => if (seed.contains(n)) v else 0L)
+          (onSeed(1000000L), onSeed(150000L))
+        })
+      .select(col("node").as("event_type"), col("r_ppm").as("ppr_ppm"))
+      .orderBy("event_type")
 
   /** HITS hubs-and-authorities (Kleinberg 1999) on the weighted
     * event-type transition graph — the directed-role decomposition
@@ -131,8 +123,8 @@ object Graph {
     * ppm-scaled re-division runs in DECIMAL(38,0) so corpus-scale edge
     * masses cannot overflow the 64-bit lane.
     *
-    * Scale shape: identical to [[pagerankEvents]] — the corpus pass is
-    * the shared staged transition-pair artifact; every half-step is one
+    * Scale shape: the corpus pass is the staged transition-pair
+    * artifact [[pagerankEvents]] shares; every half-step is one
     * vocab²-bounded join + vocab-sized aggregate + 1-row broadcast
     * total; score frames localCheckpoint per round. */
   def hitsScores(events: DataFrame, iters: Int = 4): DataFrame =

@@ -482,8 +482,9 @@ object TextAnalysis {
     * method — one shared update, one shared oracle round SQL.
     *
     * Scale shape: corpus appears once (the doc-term self-join inside
-    * termCooc, df-capped); the symmetric edge table and every
-    * iteration are vocab²-bounded; top-k is a TakeOrderedAndProject.
+    * termCooc, df-capped); the symmetric edge table is vocab²-bounded,
+    * so every iteration runs on the driver (Graph's header has the
+    * bound); top-k is a TakeOrderedAndProject over the local ranks.
     * Isolated terms (no qualifying pair) hold no rank by construction —
     * TextRank over a co-occurrence graph only ranks connected terms. */
   def textrankTerms(docs: DataFrame, iters: Int = 4, topK: Int = 25,
@@ -491,9 +492,9 @@ object TextAnalysis {
                     minPairCount: Long = 5L): DataFrame = {
     val und = termCooc(docs, maxDf, minPairCount)
       .select(col("ta"), col("tb"), col("c_ab"))
-    // tracked: the edge normalization inside pagerankCore references
-    // this frame twice, and each occurrence would otherwise re-run the
-    // corpus-sized doc-term self-join
+    // tracked: pagerankCore's edge collect references this frame twice
+    // and its node collect once more, and each occurrence would
+    // otherwise re-run the corpus-sized doc-term self-join
     val sym = graft.Caches.track(
       und.select(col("ta").as("src"), col("tb").as("dst"),
           col("c_ab").as("c"))

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graph
@@ -95,6 +98,82 @@ class GraphSpec extends SparkTestBase {
       (3L, 1000L, 2L, "a"), (4L, 2000L, 2L, "b"))
     val r = Graph.pprEvents(ev).as[(String, Long)].collect().toMap
     assert(r == Map("a" -> 150000L, "b" -> 127500L))
+    Caches.releaseAll()
+  }
+
+  /** Spark jobs started while `body` runs; the listener bus is drained
+    * before the count is read, since its events arrive asynchronously. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerBusDrain(sc) } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("the power iteration's job count does not grow with iters") {
+    val ev = events(
+      (1L, 1000L, 1L, "x"), (2L, 2000L, 1L, "y"), (3L, 3000L, 1L, "z"),
+      (4L, 1000L, 2L, "y"), (5L, 2000L, 2L, "x"))
+    val counts = Seq[(String, Int => DataFrame)](
+      "pagerankEvents" -> (i => Graph.pagerankEvents(ev, iters = i)),
+      "pprEvents" -> (i => Graph.pprEvents(ev, iters = i))
+    ).map { case (name, q) =>
+      q(1).collect() // stages the transition pairs outside the count
+      val one = jobsDuring(q(1).collect())
+      val five = jobsDuring(q(5).collect())
+      Caches.releaseAll()
+      (name, one, five)
+    }
+    assert(counts.forall(c => c._2 == c._3),
+      counts.map(c => s"${c._1}: ${c._2} jobs at iters=1, ${c._3} at iters=5")
+        .mkString("; "))
+  }
+
+  test("a null event type stays a node and holds only the teleport floor") {
+    // null→a is dropped by the equi-join on src, b→null by dst IS NOT
+    // NULL; the null node still counts in n = 3 and gets no inbound mass
+    val ev = events(
+      (1L, 1000L, 1L, "a"), (2L, 2000L, 1L, "b"),
+      (3L, 3000L, 1L, "a"), (4L, 4000L, 1L, "b"),
+      (5L, 1000L, 2L, null), (6L, 2000L, 2L, "a"),
+      (7L, 1000L, 3L, "b"), (8L, 2000L, 3L, null))
+    val r = Graph.pagerankEvents(ev).as[(String, Long)].collect().toMap
+    assert(r == Map("a" -> 333333L, "b" -> 333333L,
+      (null: String) -> 150000L / 3))
+    Caches.releaseAll()
+  }
+
+  test("an isolated type keeps exactly 150000 div n") {
+    // z occurs alone in its user's stream: no transition in or out
+    val ev = events(
+      (1L, 1000L, 1L, "a"), (2L, 2000L, 1L, "b"),
+      (3L, 3000L, 1L, "a"), (4L, 4000L, 1L, "b"),
+      (5L, 1000L, 2L, "z"))
+    val r = Graph.pagerankEvents(ev).as[(String, Long)].collect().toMap
+    assert(r == Map("a" -> 333333L, "b" -> 333333L, "z" -> 150000L / 3))
+    Caches.releaseAll()
+  }
+
+  test("pprEvents seeds at Spark's min: binary UTF-8 order, not UTF-16") {
+    // U+FF21 is EF BC A1 in UTF-8 and FF21 in UTF-16; U+1F600 is F0 9F
+    // 98 80 and D83D DE00. Spark's min (UTF-8 bytes) picks the fullwidth
+    // letter; java.lang.String.compareTo (UTF-16 units) would pick the
+    // emoji. Edges run wide → emoji only, so the seed has no inbound mass.
+    val (wide, emoji) = ("Ａ", "😀")
+    assert(emoji.compareTo(wide) < 0, "the two orders must disagree")
+    val ev = events(
+      (1L, 1000L, 1L, wide), (2L, 2000L, 1L, emoji),
+      (3L, 1000L, 2L, wide), (4L, 2000L, 2L, emoji))
+    val seed = ev.agg(min(col("event_type"))).as[String].head()
+    assert(seed == wide)
+    val r = Graph.pprEvents(ev).as[(String, Long)].collect().toMap
+    assert(r == Map(seed -> 150000L, emoji -> 127500L))
     Caches.releaseAll()
   }
 
